@@ -126,7 +126,7 @@ def end_to_end(rep):
         "spark_jobs": (median([s["jobs"] for s in per_round]), "count"),
         "shuffle_write_bytes": (median([s["shuffle_write_bytes"] for s in per_round]), "B"),
     }
-    return m, len(lat)
+    return m
 
 
 def per_layer(rep):
@@ -248,9 +248,7 @@ def run_one(root, classes, workload, seed, seconds, trace, warmups=WARMUPS,
 def result_line(rep, problems, trace):
     timed = {r["id"] for r in rep["rounds"] if r["kind"] == "timed"}
     ss = [s for s in rep["samples"] if s["round"] in timed]
-    metrics, _ = end_to_end(rep)
-    if trace:
-        metrics = per_layer(rep)
+    metrics = per_layer(rep) if trace else end_to_end(rep)
     return {
         "correct": not problems,
         "attempted": len(ss),
