@@ -1,13 +1,15 @@
 """Result checks of one benchmark run.
 
-Every query's final-round result is compared with DuckDB running the
-program's oracle SQL (`SparkEntry.oracleSql`) on the same tables, by
-the rules of scripts/compare_oracle.py: columns sorted by name, equal
-column names, equal row count, and equal values row by row (floats
-exactly, sign of zero included; other types by their string form).
-The cold set-up result of each query must be identical to its final
-one, and on ta_panel the bars' total volume must equal the events row
-count.
+Set-up writes two rounds' results: the cold round's (`cold/`) and the
+last warm-up round's (`warm/`), which runs the same released-and-rebuilt
+path as every timed round. Every query's warm result is compared with
+DuckDB running the program's oracle SQL (`SparkEntry.oracleSql`) on the
+same tables, by the rules of scripts/compare_oracle.py: columns sorted
+by name, equal column names, equal row count, and equal values row by
+row (floats exactly, sign of zero included; other types by their string
+form). The cold result of each query must be identical to its warm one,
+and on ta_panel the bars' total volume must equal the events row count.
+A smoke run has the cold round only, and checks it against DuckDB.
 """
 import glob
 import hashlib
@@ -96,17 +98,20 @@ def check(rep, data, run_dir):
     for p in glob.glob(os.path.join(data, "*.parquet")):
         name = os.path.basename(p)[:-8]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
-    failed = {s["query"] for s in rep["samples"] if not s["ok"]}
+    # a query that failed in every round it ran is counted in `failed`
+    # and has no result to check
+    ran_ok = {s["query"] for s in rep["samples"] if s["ok"]}
+    warm = any(r["kind"] == "warmup" and r["id"] != "w1" for r in rep["rounds"])
     for q in rep["queries"]:
-        final = os.path.join(run_dir, "final", q)
-        edf = _read(final)
+        cold = os.path.join(run_dir, "cold", q)
+        checked = os.path.join(run_dir, "warm", q) if warm else cold
+        edf = _read(checked)
         if edf is None:
-            if q not in failed:
-                problems.append(f"{q}: no final result")
+            if q in ran_ok:
+                problems.append(f"{q}: no result in {os.path.relpath(checked, run_dir)}")
             continue
-        cold = digest(os.path.join(run_dir, "cold", q))
-        if cold != digest(final):
-            problems.append(f"{q}: cold set-up result differs from the final round's")
+        if warm and digest(cold) != digest(checked):
+            problems.append(f"{q}: cold set-up result differs from the warm round's")
         sql = rep["oracle_sql"].get(q)
         if sql is None:
             problems.append(f"{q}: no oracle SQL")

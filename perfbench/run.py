@@ -7,8 +7,8 @@ its metrics as the last line of stdout.
 
 Run it from the repository root. It builds the program from source
 (perfbench/build.py), runs perfbench/src/PerfBench.scala against the
-committed test tables, checks every query's final result against
-DuckDB running the program's own oracle SQL, and prints one JSON
+committed test tables, checks every query's result against DuckDB
+running the program's own oracle SQL (perfbench/oracle.py), and prints one JSON
 object: {"correct", "attempted", "failed", "metrics"}. `--trace 1`
 prints the per-layer metrics instead of the end-to-end ones and keeps
 the full per-query record in .bench_out/trace-<workload>-<seed>.json.
@@ -38,6 +38,9 @@ WORKLOADS = ("ta_panel", "corpus_cold", "ann_serve")
 # run until --seconds have passed, at least MIN_ROUNDS of them
 WARMUPS = 2
 MIN_ROUNDS = 2
+# the JVM's threads by kind (PerfBench.threadKind); their CPU ticks
+THREAD_KINDS = ("jit", "gc", "main", "task", "other")
+TICK = os.sysconf("SC_CLK_TCK")
 
 # Spark 4 on JDK 17 outside spark-submit (same list as build.sbt)
 ADD_OPENS = [
@@ -158,15 +161,18 @@ def per_layer(rep):
             "exec.gc_ms": sum(s["gc_ms"] for s in samples),
             "exec.par": ex["task_run_ms"] / max(exec_ms, 1e-9),
             "exec.window_ops": ex["window_ops"],
+            "codegen.compiles": r["codegen_compiles"],
             "chains.bill_ms": sum(r["chain_bill_ms"].values()),
             "chains.builds": len(r["chain_bill_ms"]),
             "chains.staged_bytes": r["staged_bytes"],
             "jvm.non_task_cpu_s": r["cpu_s"] - allsp["task_cpu_ns"] / 1e9,
             "jvm.heap_used_mb": r["heap_used_mb"],
+            **{f"jvm.{k}_thread_cpu_s": r["thread_ticks"].get(k, 0) / TICK
+               for k in THREAD_KINDS},
             "trace.round_s": r["wall_s"],
         })
     units = {"ms": "ms", "jobs": "count", "stages": "count", "tasks": "count",
-             "builds": "count", "window_ops": "count", "bytes": "B",
+             "builds": "count", "compiles": "count", "window_ops": "count", "bytes": "B",
              "_s": "s", "par": "ratio", "mb": "MB"}
 
     def unit(name):

@@ -1,17 +1,22 @@
 package perfbench
 
 import java.lang.management.ManagementFactory
-import java.nio.file.{Files, Paths}
 import java.util.Properties
 import java.util.concurrent.{ConcurrentHashMap, Semaphore, TimeUnit}
 import java.util.concurrent.atomic.AtomicLongArray
+
+import java.nio.file.Files
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.perfbench.SqlEvents
@@ -122,20 +127,19 @@ object PerfBench {
   final case class Workload(queries: Seq[String], releasePerRound: SparkSession => Unit)
 
   // Query subsets sized so that one run (cold set-up, a warm-up round,
-  // the timed rounds and the result check) ends well within a minute:
-  // see README.md for why each query is in.
+  // two timed rounds) takes 30-45 s, because the benchmark is run 70
+  // times within an hour: see README.md for why each query is in.
   val taPanel: Seq[String] = Seq(
     "sma", "ema", "rsi", "macd", "bollinger_bands", "ichimoku", "psar",
     "vwap_distributed", "asof_join", "range_join")
 
   val corpusCold: Seq[String] = Seq(
-    "corpus_filter", "pack_batches_epochs", "doc_bigram_logprob",
+    "corpus_filter", "pack_batches", "doc_bigram_logprob",
     "tokenizer_ids", "multimodal_phash_dedup", "ngram_counts")
 
   val annServe: Seq[String] = Seq(
     "ann_topk", "ann_topk_ivf_trained", "ann_topk_opq_ivfpq",
-    "ann_graph_walk", "hybrid_search_rrf", "ann_knn_graph_append",
-    "ann_knn_graph_delete")
+    "ann_graph_walk", "hybrid_search_rrf", "ann_knn_graph_delete")
 
   val workloads: Map[String, Workload] = Map(
     "ta_panel" -> Workload(taPanel, _ => ()),
@@ -162,25 +166,33 @@ object PerfBench {
   private def uptimeS(): Double =
     ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
 
-  // ---- minimal JSON writer -------------------------------------------
-  private def js(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-  private def jv(v: Any): String = v match {
-    case s: String => js(s)
-    case b: Boolean => b.toString
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case m: Map[_, _] =>
-      m.map { case (k, x) => js(k.toString) + ":" + jv(x) }.mkString("{", ",", "}")
-    case xs: Iterable[_] => xs.map(jv).mkString("[", ",", "]")
-    case None => "null"
-    case Some(x) => jv(x)
-  }
+  /** Kind of a JVM thread by its kernel name: JIT compiler, GC, the
+    * main thread (query construction, Catalyst, codegen, the chain
+    * drivers), Spark task threads, and the rest (scheduler, AQE stage
+    * and exchange pools, listener bus, RPC).
+    */
+  private def threadKind(comm: String): String =
+    if (comm.contains("CompilerThre")) "jit"
+    else if (comm.startsWith("GC Thread") || comm.startsWith("G1 ") ||
+      comm == "VM Thread") "gc"
+    else if (comm == "java") "main"
+    else if (comm.startsWith("Executor task")) "task"
+    else "other"
+
+  /** CPU clock ticks (user + system) of every live thread of this JVM,
+    * by thread id, from /proc/self/task; empty where that is absent.
+    */
+  private def threadTicks(): Map[String, (String, Long)] =
+    Option(new java.io.File("/proc/self/task").listFiles).toSeq.flatten
+      .flatMap { t =>
+        try {
+          val st = new String(Files.readAllBytes(t.toPath.resolve("stat")))
+          val close = st.lastIndexOf(')')
+          val f = st.substring(close + 2).split(' ')
+          Some(t.getName ->
+            (threadKind(st.substring(st.indexOf('(') + 1, close)), f(11).toLong + f(12).toLong))
+        } catch { case NonFatal(_) => None }  // the thread ended meanwhile
+      }.toMap
 
   sealed trait Action
   case object Noop extends Action
@@ -208,15 +220,15 @@ object PerfBench {
     val rng = new scala.util.Random(seed)
 
     /** One query: construction, then one action that computes every
-      * output column. Returns the frame for a later check write.
+      * output column.
       */
-    def runQuery(round: String, q: String, action: Action): Option[DataFrame] = {
+    def runQuery(round: String, q: String, action: Action): Unit = {
       span(s"$round/$q/construct")
       val bill0 = ChainBill.totalMs
       val t0 = System.nanoTime()
       var t1 = t0
       var gc0 = 0L
-      val (df, err) =
+      val err =
         try {
           val df = fns(q)(spark, dir)
           t1 = System.nanoTime()
@@ -226,11 +238,11 @@ object PerfBench {
             case Noop => df.write.format("noop").mode("overwrite").save()
             case Save(d) => df.coalesce(1).write.mode("overwrite").parquet(s"$d/$q")
           }
-          (Some(df), "")
+          ""
         } catch {
           case NonFatal(e) =>
             System.err.println(s"[perfbench] $round $q failed: $e")
-            (None, String.valueOf(e.getMessage).take(300))
+            String.valueOf(e.getMessage).take(300)
         }
       val t2 = System.nanoTime()
       spark.catalog.clearCache()
@@ -239,18 +251,19 @@ object PerfBench {
         "exec_ms" -> (if (err.isEmpty) (t2 - t1) / 1e6 else 0.0),
         "gc_ms" -> (if (err.isEmpty) gcMs() - gc0 else 0L),
         "chain_bill_ms" -> (ChainBill.totalMs - bill0))
-      df
     }
 
     def runRound(id: String, kind: String, release: Boolean,
-        action: Action): Map[String, DataFrame] = {
+        action: Action): Unit = {
       if (release) { span(s"$id/-/release"); workload.releasePerRound(spark) }
       val order = rng.shuffle(workload.queries)
       val bill0 = ChainBill.snapshot
       val cpu0 = osBean.getProcessCpuTime
       val gc0 = gcMs()
+      val ticks0 = if (traced) threadTicks() else Map.empty[String, (String, Long)]
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
-      val dfs = order.flatMap(q => runQuery(id, q, action).map(q -> _)).toMap
+      order.foreach(runQuery(id, _, action))
       val wall = (System.nanoTime() - t0) / 1e9
       val cpu = (osBean.getProcessCpuTime - cpu0) / 1e9
       val gc = gcMs() - gc0
@@ -261,11 +274,15 @@ object PerfBench {
       if (traced) {
         val rt = Runtime.getRuntime
         val staged = sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum
+        // threads that ended during the round lose their ticks
+        val ticks = threadTicks().toSeq
+          .map { case (tid, (k, n)) => k -> (n - ticks0.get(tid).fold(0L)(_._2)) }
+          .groupMapReduce(_._1)(_._2)(_ + _)
         rec ++= Map("heap_used_mb" -> (rt.totalMemory - rt.freeMemory) / 1048576.0,
-          "staged_bytes" -> staged)
+          "staged_bytes" -> staged, "thread_ticks" -> ticks,
+          "codegen_compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
       }
       rounds += rec
-      dfs
     }
 
     /** Harness-timed source reads: one `spark.read.parquet` per fixture
@@ -289,35 +306,28 @@ object PerfBench {
       rounds += Map("id" -> id, "kind" -> "source", "read_ms" -> (times ++ bars))
     }
 
-    val coldDir = s"$out/cold"
-    val finalDir = s"$out/final"
     // set-up: the first round is cold (first build of every staged
-    // chain, trained indexes included) and keeps its results for the
-    // cold-versus-warm check; the rest warm the JIT
-    var last = runRound("w1", "warmup", release = false, Save(coldDir))
-    (2 to warmups).foreach(i => runRound(s"w$i", "warmup", release = true, Noop))
+    // chain, trained indexes included); the rest warm the JIT, the last
+    // of them on the same released-and-rebuilt path as every timed
+    // round. The first and the last write their results for the checks,
+    // so the timed rounds run the noop sink alone and no check pass
+    // re-executes the queries after them.
+    runRound("w1", "warmup", release = false, Save(s"$out/cold"))
+    (2 to warmups).foreach(i => runRound(s"w$i", "warmup", release = true,
+      if (i == warmups) Save(s"$out/warm") else Noop))
     val setupS = uptimeS()
     val t0 = System.nanoTime()
     var n = 0
     while (n < maxRounds && (n < minRounds || (System.nanoTime() - t0) / 1e9 < seconds)) {
       n += 1
       if (traced) sourceProbe(s"s$n")
-      last = runRound(s"t$n", "timed", release = true, Noop)
+      runRound(s"t$n", "timed", release = true, Noop)
     }
     val measuredS = (System.nanoTime() - t0) / 1e9
     if (traced) {
       // the staged chains of the last timed round are still held: a
       // round that releases nothing shows what the releases cost
-      last = runRound("x1", "unreleased", release = false, Noop)
-    }
-    // check: write the final round's frames (every chain they read is
-    // still staged) for the DuckDB comparison
-    workload.queries.foreach { q =>
-      span(s"c/$q/check")
-      last.get(q).foreach { df =>
-        try df.coalesce(1).write.mode("overwrite").parquet(s"$finalDir/$q")
-        catch { case NonFatal(e) => System.err.println(s"[perfbench] check $q failed: $e") }
-      }
+      runRound("x1", "unreleased", release = false, Noop)
     }
     val volume =
       if (wname == "ta_panel") {
@@ -344,7 +354,8 @@ object PerfBench {
         k -> v.replace("{SFDIR}", dir).replace("{OPQROT}", opqRot) },
       "bars_volume" -> volume,
       "load_avg" -> osBean.getSystemLoadAverage)
-    Files.writeString(Paths.get(s"$out/report.json"), jv(report))
+    new ObjectMapper().registerModule(DefaultScalaModule)
+      .writeValue(new java.io.File(s"$out/report.json"), report)
     Chains.releaseAll(spark)
     spark.stop()
   }
